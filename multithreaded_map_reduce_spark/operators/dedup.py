@@ -34,13 +34,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
+    MINHASH_COEFFS,
+    NUM_MINHASH,
     POLY_BASE,
     POLY_MOD,
-    band_hashes,
     hash_array,
     token_hash,
 )
-from ..functions.rounding import pround
+from ..functions.rounding import pround, sql_pround_spark
 from ..functions.text import char_shingles
 from ..functions.vectors import as_double, cosine
 from ..sources.catalog import fan_out
@@ -58,24 +59,6 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     return df.groupBy(*key_cols).agg(
         F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies")
     )
-
-
-def _unique_view(df: DataFrame, id_col: str, text_col: str) -> str:
-    """Register ``(id, text)`` under a per-call unique temp view name.
-
-    A fixed name ('__minhash_src') is shared session state: two calls
-    racing from different threads cross-wire inputs, and the view leaks
-    into the caller's session (ADVICE r2). The uuid suffix makes each
-    call self-contained; callers drop the view after ``spark.sql``
-    returns — safe because view resolution happens at analysis time, so
-    the returned DataFrame's plan no longer references the name."""
-    import uuid
-
-    view = f"__dedup_src_{uuid.uuid4().hex}"
-    fan_out(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    ).createOrReplaceTempView(view)
-    return view
 
 
 def shingle_hash_rows(
@@ -148,6 +131,40 @@ def with_shingle_hashes(
 
 
 
+def _sql_signatures(src: str, num: int) -> str:
+    """Spark SQL: (id, sig) minhash signatures of the (id, h) rows of
+    ``src`` — one codegen'd ``min((h*a+b) % M)`` per permutation."""
+    mins = ", ".join(f"min((h * {a} + {b}) % {POLY_MOD})" for a, b in MINHASH_COEFFS[:num])
+    return f"SELECT id, array({mins}) AS sig FROM {src} GROUP BY id"
+
+
+def _sql_band_rows(src: str, bands: int, rows: int) -> str:
+    """Spark SQL: (id, bh) rows, one per band of the (id, sig) relation
+    ``src`` — the SQL form of ``functions.hashing.band_hashes``."""
+
+    def band(j: int) -> str:
+        h = f"CAST({j} AS BIGINT)"
+        for r in range(rows):
+            v = f"element_at(sig, {j * rows + r + 1}) % {POLY_MOD}"
+            h = f"(({h}) * {POLY_BASE} + {v}) % {POLY_MOD}"
+        return h
+
+    arr = ", ".join(band(j) for j in range(bands))
+    return f"SELECT id, explode(array({arr})) AS bh FROM {src}"
+
+
+def _sql_candidates(src: str, bands: int, rows: int, max_bucket: int | None) -> str:
+    """Spark SQL: distinct (id_a < id_b) band-bucket pairs of the (id,
+    sig) relation ``src`` (see ``minhash_candidates``)."""
+    cap = "" if max_bucket is None else f" AND size(ids) <= {max_bucket}"
+    return f"""SELECT DISTINCT id_a, id_b FROM (
+        SELECT ids FROM (
+            SELECT collect_set(id) AS ids FROM ({_sql_band_rows(src, bands, rows)}) GROUP BY bh
+        ) WHERE size(ids) >= 2{cap}
+    ) LATERAL VIEW explode(ids) ta AS id_a
+      LATERAL VIEW explode(filter(ids, y -> y > id_a)) tb AS id_b"""
+
+
 def minhash_signatures_agg(rows: DataFrame, num: int | None = None) -> DataFrame:
     """(id, sig): minhash signatures via 32 codegen'd min() aggregates
     over (id, h) shingle-hash rows.
@@ -158,18 +175,15 @@ def minhash_signatures_agg(rows: DataFrame, num: int | None = None) -> DataFrame
     exploded rows with ``min((h*a+b) % M)`` keeps everything in
     whole-stage codegen with map-side partial mins: the shuffle carries
     one 32-long row per (partition, id). ~10× faster locally and the
-    right shape at 100 TB."""
-    from ..functions.hashing import MINHASH_COEFFS, NUM_MINHASH
+    right shape at 100 TB. The plan is one SQL string, not 32 Column
+    aggregates built through py4j (see ``minhash_dedup_pairs``)."""
+    q = _sql_signatures("{rows}", num or NUM_MINHASH)
+    return rows.sparkSession.sql(q, rows=rows)
 
-    coeffs = MINHASH_COEFFS[: (num or NUM_MINHASH)]
-    mins = [
-        F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(POLY_MOD)).alias(f"_m{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    agg = rows.groupBy("id").agg(*mins)
-    return agg.select(
-        "id", F.array(*[F.col(f"_m{i}") for i in range(len(coeffs))]).alias("sig")
-    )
+
+def band_rows(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(id, bh): one band-hash row per band of each (id, sig) signature."""
+    return sigs.sparkSession.sql(_sql_band_rows("{sigs}", bands, rows), sigs=sigs)
 
 
 def minhash_candidates(
@@ -204,21 +218,8 @@ def candidates_from_signatures(
     max_bucket: int | None,
 ) -> DataFrame:
     """Band → bucket → in-bucket pair expansion over an (id, sig) relation."""
-    banded = sigs.select(
-        "id", F.explode(band_hashes(F.col("sig"), bands, rows_per_band)).alias("bh")
-    )
-    buckets = banded.groupBy("bh").agg(F.collect_set("id").alias("ids"))
-    buckets = buckets.filter(F.size("ids") >= 2)
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    return (
-        buckets.select(F.explode("ids").alias("id_a"), F.col("ids"))
-        .select(
-            "id_a",
-            F.explode(F.filter("ids", lambda y: y > F.col("id_a"))).alias("id_b"),
-        )
-        .distinct()
-    )
+    q = _sql_candidates("{sigs}", bands, rows_per_band, max_bucket)
+    return sigs.sparkSession.sql(q, sigs=sigs)
 
 
 def jaccard_of(a: Column, b: Column) -> Column:
@@ -227,7 +228,7 @@ def jaccard_of(a: Column, b: Column) -> Column:
 
 
 def minhash_dedup_pairs(
-    df: DataFrame,
+    df: DataFrame | None,
     id_col: str,
     text_col: str,
     n: int = 2,
@@ -247,168 +248,65 @@ def minhash_dedup_pairs(
     join with tens of thousands of low-jaccard candidates per 5k docs:
     measured 174k candidates at sf0.1, the round-1 bottleneck.)
 
-    The persisted shingle rows feed two per-id aggregations, each with
-    its own id-keyed shuffle (partial map-side aggregation first, so the
+    The shingle rows feed two per-id aggregations, each with its own
+    id-keyed shuffle (partial map-side aggregation first, so the
     exchanges carry one row per (partition, id)): the signature
     aggregation — 32 codegen'd ``min`` exprs in a hash aggregate — and
-    the ``collect_set`` verify relation. Keeping them
-    SEPARATE matters: collect_set is a typed-imperative aggregate, so a
-    merged agg runs on ObjectHashAggregateExec where the 32 min exprs
-    evaluate interpreted per row (~25 s of CPU at sf0.1 measured vs ~1 s
-    codegen'd).
+    the ``collect_set`` verify relation. Keeping them SEPARATE matters:
+    collect_set is a typed-imperative aggregate, so a merged agg runs on
+    ObjectHashAggregateExec where the 32 min exprs evaluate interpreted
+    per row (~25 s of CPU at sf0.1 measured vs ~1 s codegen'd).
+
+    Signatures, bands, buckets, pairs and the verify join are ONE
+    generated Spark-SQL string over the shingle rows and the verify
+    relation, both passed in as DataFrames. Built from Columns instead,
+    the 32 permutation aggregates and 8 band folds are hundreds of py4j
+    calls. Traced ``corpus_dedup`` runs (2k docs, seed 7, local[2] on 4
+    vCPUs), warm ``dedup_minhash_lsh`` calls: Column plan 1.54 s to
+    build (a 0.1 s table load included) and 0.58 s to execute; SQL plan
+    0.17 s to build and 0.51 s to execute.
 
     Materialization is ``localCheckpoint`` rather than ``persist``
     (VERDICT r9 item 1): a checkpointed relation never registers in the
     CacheManager, so it can't be substituted into OTHER queries' plans
     (run-order plan determinism), and its blocks are GC-released when
     the relation goes out of scope instead of leaking MEMORY_AND_DISK
-    storage for the life of a multi-hundred-query session.
+    storage for the life of a multi-hundred-query session. The
+    checkpointed ``collect_set`` verify relation is read by both join
+    sides, so it is computed once.
 
     ``rows_rel``: optional prebuilt (id, h) shingle-hash relation —
     pass the module-level shared artifact (queries/dedup.py
     ``_shared_shingle_rows``) to skip the per-call scan+checkpoint
-    entirely. Duplicate rows don't matter: both consumers (min-per-
-    permutation signatures, collect_set verify sets) are
-    duplicate-insensitive, so the distinct shared relation is
-    value-identical to the raw one."""
+    entirely; ``df`` may then be None. Duplicate rows don't matter: both
+    consumers (min-per-permutation signatures, collect_set verify sets)
+    are duplicate-insensitive, so the distinct shared relation is
+    value-identical to the raw one.
+
+    Float note: the SQL rounding uses DOUBLE (``d``) literals, so the
+    jaccard is bit-equal with the Column ``pround``."""
     if rows_rel is None:
+        if df is None:
+            raise ValueError("minhash_dedup_pairs needs df or rows_rel")
         rows_rel = shingle_hash_rows(df, id_col, text_col, n).localCheckpoint(
             eager=False
         )
-    sigs = minhash_signatures_agg(rows_rel, num=bands * rows)
-    pairs = candidates_from_signatures(sigs, bands, rows, max_bucket)
     hashed = (
         rows_rel.groupBy("id")
         .agg(F.collect_set("h").alias("hashes"))
         .localCheckpoint(eager=False)  # read by both verify sides
     )
-    ha = hashed.select(F.col("id").alias("id_a"), F.col("hashes").alias("h_a"))
-    hb = hashed.select(F.col("id").alias("id_b"), F.col("hashes").alias("h_b"))
-    return (
-        pairs.join(ha, "id_a")
-        .join(hb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            pround(jaccard_of(F.col("h_a"), F.col("h_b")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_dedup_pairs_sql(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 2,
-    bands: int = 8,
-    rows: int = 4,
-    threshold: float = 0.5,
-    max_bucket: int = 100,
-) -> DataFrame:
-    """``minhash_dedup_pairs`` as ONE generated Spark-SQL string — the
-    identical pipeline (same constants, same shapes, differentially
-    equal: tests/test_dedup.py asserts set-equality with the DataFrame
-    builder), built for driver-side latency.
-
-    Why: the DataFrame builder materializes hundreds of Column objects
-    (32 permutation aggregates, 8 band folds), each a py4j round-trip —
-    measured ~2.5 s of plan CONSTRUCTION cold / ~0.8 s warm at any SF,
-    before Spark executes anything. String generation is Python-side
-    (~1 ms) plus one ``spark.sql`` parse (~0.15 s). Trade-off: Catalyst
-    inlines CTEs, so the shingle relation is computed once per
-    consumer instead of persisted — a few hundred ms of extra executor
-    CPU at sf0.1 (linear, distributed) for ~2 s less driver latency;
-    the verify join's two ``hashed`` sides dedupe via ReusedExchange.
-    At cluster scale with huge corpora, prefer ``minhash_dedup_pairs``
-    (persisted shingles); for interactive/driver-bound use, this one.
-
-    Float note: SQL literals like ``1000000.0`` parse as DECIMAL in
-    Spark SQL — the rounding uses int * double (``+ 0.5d``) literals so
-    the jaccard stays a DOUBLE, bit-equal with the DataFrame pround.
-
-    The verify joins carry SHUFFLE_MERGE hints: AQE would broadcast the
-    tiny pair relation into two independent probe joins, recomputing
-    the ``hashed`` aggregation per side; pinned to sort-merge the two
-    hashed exchanges are identical and one is reused (warm median
-    1.64 s → 1.50 s at sf0.1).
-    """
-    from ..functions.hashing import MINHASH_COEFFS
-
-    M = POLY_MOD
-    num = bands * rows
-
-    def th(x: str) -> str:
-        return f"CAST(conv(substring(md5({x}), 1, 12), 16, 10) AS BIGINT) % {M}"
-
-    mins = ", ".join(
-        f"min((h * {a} + {b}) % {M}) AS m{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS[:num])
-    )
-
-    def band_expr(j: int) -> str:
-        h = f"CAST({j} AS BIGINT)"
-        for r in range(rows):
-            h = f"(({h}) * {POLY_BASE} + (m{j * rows + r} % {M})) % {M}"
-        return h
-
-    bands_arr = "array(" + ", ".join(band_expr(j) for j in range(bands)) + ")"
-
-    slices = ", ".join(
-        f"slice(toks, {i + 1}, greatest(size(toks) - {i}, 0)) AS t{i}"
-        for i in range(1, n)
-    )
-    zip_args = ", ".join(["toks"] + [f"t{i}" for i in range(1, n)])
-    z_cols = ", ".join(
-        ["z.toks AS t0"] + [f"z.t{i} AS t{i}" for i in range(1, n)]
-    )
-    h_expr = th("t0")
-    for i in range(1, n):
-        h_expr = (
-            f"CASE WHEN t{i} IS NULL THEN {h_expr} "
-            f"ELSE (({h_expr}) * {POLY_BASE} + ({th(f't{i}')})) % {M} END"
-        )
-
-    view = _unique_view(df, id_col, text_col)
-    sql = f"""
-WITH base AS (
-    SELECT id, split(regexp_replace(text, '^\\\\s+|\\\\s+$', ''), '\\\\s+') AS toks
-    FROM {view} WHERE length(text) > 0
-), base2 AS (
-    SELECT id, toks, size(toks) AS k, {slices}
-    FROM base WHERE size(toks) > 1 OR element_at(toks, 1) != ''
-), ex AS (
-    SELECT id, k, pos, {z_cols}
-    FROM base2 LATERAL VIEW posexplode(arrays_zip({zip_args})) t AS pos, z
-), rows_rel AS (
-    SELECT id, {h_expr} AS h
-    FROM ex WHERE pos + {n} <= k OR (k < {n} AND pos = 0)
-), sigs AS (
-    SELECT id, {mins} FROM rows_rel GROUP BY id
-), banded AS (
-    SELECT id, bh FROM sigs LATERAL VIEW explode({bands_arr}) t AS bh
-), buckets AS (
-    SELECT bh, ids FROM (SELECT bh, collect_set(id) AS ids FROM banded GROUP BY bh)
-    WHERE size(ids) BETWEEN 2 AND {max_bucket}
-), pairs AS (
-    SELECT DISTINCT id_a, id_b FROM buckets
-    LATERAL VIEW explode(ids) ta AS id_a
-    LATERAL VIEW explode(filter(ids, y -> y > id_a)) tb AS id_b
-), hashed AS (
-    SELECT id, collect_set(h) AS hashes FROM rows_rel GROUP BY id
-)
+    inter = "size(array_intersect(a.hashes, b.hashes))"
+    jaccard = sql_pround_spark(f"{inter} / (size(a.hashes) + size(b.hashes) - {inter})", 6)
+    q = f"""
+WITH sigs AS ({_sql_signatures('{shingles}', bands * rows)}),
+pairs AS ({_sql_candidates('sigs', bands, rows, max_bucket)})
 SELECT id_a, id_b, jaccard FROM (
-    SELECT /*+ SHUFFLE_MERGE(a), SHUFFLE_MERGE(b) */ p.id_a, p.id_b,
-           floor((size(array_intersect(a.hashes, b.hashes))
-                  / (size(a.hashes) + size(b.hashes)
-                     - size(array_intersect(a.hashes, b.hashes)))) * 1000000 + 0.5d)
-               / 1000000 AS jaccard
-    FROM pairs p JOIN hashed a ON p.id_a = a.id JOIN hashed b ON p.id_b = b.id
-) WHERE jaccard >= {threshold}
+    SELECT p.id_a, p.id_b, {jaccard} AS jaccard
+    FROM pairs p JOIN {{hashed}} a ON p.id_a = a.id JOIN {{hashed}} b ON p.id_b = b.id
+) WHERE jaccard >= {float(threshold)}d
 """
-    out = df.sparkSession.sql(sql)
-    df.sparkSession.catalog.dropTempView(view)
-    return out
+    return rows_rel.sparkSession.sql(q, shingles=rows_rel, hashed=hashed)
 
 
 def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -606,12 +504,14 @@ def simhash_pairs_sql(
     max_hamming: int = 2,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
-    """``simhash_pairs`` as one generated Spark-SQL string — same
-    rationale and same equivalence contract as
-    ``minhash_dedup_pairs_sql``: the 32 vote aggregates + 32 bit
-    recombinations are ~130 py4j Column constructions in the DataFrame
-    form (~1 s of driver latency); one SQL parse replaces them. Results
-    are set-equal (tested) and share the brute-force oracle.
+    """``simhash_pairs`` as one generated Spark-SQL string over the
+    (id, text) rows, passed to ``spark.sql`` as a DataFrame. Results are
+    set-equal with the Column builder (tested) and share its
+    brute-force oracle. In the Column form, the 32 vote aggregates and
+    32 bit recombinations are ~130 py4j Column constructions. A traced
+    ``corpus_dedup`` run (2k docs, seed 7, local[2] on 4 vCPUs) of
+    ``dedup_simhash`` spends 0.15 s warm building this plan and 0.63 s
+    executing it.
 
     Same ReuseExchange-friendly banded self-join with a window-count
     ``max_bucket`` degenerate-bucket cap as the DataFrame twin (see
@@ -635,13 +535,13 @@ def simhash_pairs_sql(
     blocks_arr = ", ".join(f"shiftright(simhash, {8 * i}) % 256" for i in range(4))
     cap = 1 << 62 if max_bucket is None else max_bucket
 
-    view = _unique_view(df, id_col, text_col)
+    src = fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
     sql = f"""
 WITH ex AS (
     SELECT id, CAST(conv(substring(md5(tok), 1, 12), 16, 10) AS BIGINT) % {M} AS h
     FROM (
         SELECT id, tok
-        FROM {view} LATERAL VIEW explode(split(text, '\\\\s+')) t AS tok
+        FROM {{docs}} LATERAL VIEW explode(split(text, '\\\\s+')) t AS tok
         WHERE length(text) > 0 AND tok != ''
     )
 ), votes AS (
@@ -664,9 +564,7 @@ FROM pruned a JOIN pruned b
   ON a.block_idx = b.block_idx AND a.block_val = b.block_val AND a.id < b.id
 WHERE bit_count(a.simhash ^ b.simhash) <= {max_hamming}
 """
-    out = df.sparkSession.sql(sql)
-    df.sparkSession.catalog.dropTempView(view)
-    return out
+    return df.sparkSession.sql(sql, docs=src)
 
 
 def _block_size_rail(rel: DataFrame, max_block: int | None) -> DataFrame:
@@ -825,9 +723,7 @@ def minhash_incremental_pairs(
         eager=False
     )
     num = bands * rows
-    c_band = minhash_signatures_agg(c_rows, num=num).select(
-        "id", F.explode(band_hashes(F.col("sig"), bands, rows)).alias("bh")
-    )
+    c_band = band_rows(minhash_signatures_agg(c_rows, num=num), bands, rows)
     c_hashed = c_rows.groupBy("id").agg(F.collect_set("h").alias("hashes"))
     return minhash_probe_pairs(
         c_band, c_hashed, batch, id_col, text_col, n, bands, rows, threshold, max_bucket
@@ -857,9 +753,7 @@ def minhash_probe_pairs(
         eager=False
     )
     b_sigs = minhash_signatures_agg(b_rows, num=bands * rows)
-    b_band = b_sigs.select(
-        "id", F.explode(band_hashes(F.col("sig"), bands, rows)).alias("bh")
-    )
+    b_band = band_rows(b_sigs, bands, rows)
 
     if max_bucket is None:
         c_capped = c_band
@@ -992,9 +886,7 @@ def build_minhash_index(
     )
     try:
         num = bands * rows
-        c_band = minhash_signatures_agg(c_rows, num=num).select(
-            "id", F.explode(band_hashes(F.col("sig"), bands, rows)).alias("bh")
-        )
+        c_band = band_rows(minhash_signatures_agg(c_rows, num=num), bands, rows)
         spark = corpus.sparkSession
         tbl = _buckets_table_name(path)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -35,8 +35,10 @@ _ALLOWED_FLAGS = {"-x", "--exitfirst", "-q", "--quiet", "-v", "--verbose", "-ra"
 #: Measured per-file call-time seconds (r14 profile run) used to
 #: bin-pack files across workers; files absent here are weighted by
 #: test count. Staleness only costs balance, never correctness.
-#: Superseded by tests/.shard_weights.json (written from each sharded
-#: run's own --durations output — self-tuning) when that file exists.
+#: Superseded by the measured weights: tests/.shard_weights.local.json
+#: (gitignored; rewritten from each sharded run's own --durations
+#: output — self-tuning) when it exists, else the tracked snapshot
+#: tests/.shard_weights.json, which no run rewrites.
 _HEAVY_FILE_SECONDS = {
     "test_plans.py": 200.0,  # post-parallelization of the 489-query lint
     "test_new_ops_r9.py": 170.0,
@@ -54,7 +56,8 @@ _HEAVY_FILE_SECONDS = {
     "test_sketches.py": 25.0,
 }
 
-_WEIGHTS_PATH = Path(__file__).resolve().parent / ".shard_weights.json"
+_SEED_WEIGHTS_PATH = Path(__file__).resolve().parent / ".shard_weights.json"
+_WEIGHTS_PATH = Path(__file__).resolve().parent / ".shard_weights.local.json"
 _DURATION_LINE = re.compile(
     r"^([0-9.]+)s (?:call|setup|teardown)\s+(tests/[^:\n]+)::[^\n]*\n?", re.M
 )
@@ -63,11 +66,12 @@ _DURATION_LINE = re.compile(
 def _load_weights() -> dict[str, float]:
     import json
 
-    if _WEIGHTS_PATH.exists():
-        try:
-            return {k: float(v) for k, v in json.loads(_WEIGHTS_PATH.read_text()).items()}
-        except (ValueError, OSError):
-            pass
+    for path in (_WEIGHTS_PATH, _SEED_WEIGHTS_PATH):
+        if path.exists():
+            try:
+                return {k: float(v) for k, v in json.loads(path.read_text()).items()}
+            except (ValueError, OSError):
+                pass
     return {}
 
 

@@ -140,32 +140,9 @@ def test_dedup_clusters_oracle(spark):
     ) > 0
 
 
-def test_minhash_sql_twin_matches_dataframe_builder(spark):
-    """The single-SQL-string minhash pipeline must produce the exact
-    pair set (ids AND rounded jaccard) of the Column-builder pipeline —
-    they are two codegen paths of one algorithm."""
-    from multithreaded_map_reduce_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        minhash_dedup_pairs_sql,
-    )
-    from multithreaded_map_reduce_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    kw = dict(n=2, bands=8, rows=4, threshold=0.5)
-    df_pairs = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_dedup_pairs(docs, "doc_id", "text", **kw).collect()
-    }
-    sql_pairs = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_dedup_pairs_sql(docs, "doc_id", "text", **kw).collect()
-    }
-    assert df_pairs == sql_pairs and df_pairs
-
-
 def test_simhash_sql_twin_matches_dataframe_builder(spark):
-    """Same contract as the minhash twin: identical (id_a, id_b,
-    hamming) sets from the SQL-string and Column-builder pipelines."""
+    """Identical (id_a, id_b, hamming) sets from the SQL-string and
+    Column-builder simhash pipelines."""
     from multithreaded_map_reduce_spark.operators.dedup import (
         simhash_pairs,
         simhash_pairs_sql,

@@ -19,13 +19,9 @@ def test_exact_dedup_empty(spark):
 
 
 def test_minhash_pairs_empty(spark):
-    from multithreaded_map_reduce_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        minhash_dedup_pairs_sql,
-    )
+    from multithreaded_map_reduce_spark.operators.dedup import minhash_dedup_pairs
 
     assert minhash_dedup_pairs(_empty_docs(spark), "doc_id", "text").count() == 0
-    assert minhash_dedup_pairs_sql(_empty_docs(spark), "doc_id", "text").count() == 0
 
 
 def test_simhash_pairs_empty(spark):

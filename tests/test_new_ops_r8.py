@@ -57,7 +57,7 @@ def test_knn_join_shape(spark):
 def test_leakproof_split_never_separates_near_dups(spark):
     """THE contract: a minhash near-dup pair always lands in ONE split
     (the plain doc_id-hash split has no such guarantee)."""
-    from multithreaded_map_reduce_spark.operators.dedup import minhash_dedup_pairs_sql
+    from multithreaded_map_reduce_spark.operators.dedup import minhash_dedup_pairs
     from multithreaded_map_reduce_spark.queries.curation import (
         curation_split_leakproof,
     )
@@ -68,7 +68,7 @@ def test_leakproof_split_never_separates_near_dups(spark):
         for r in curation_split_leakproof(spark, SF_SMOKE).collect()
     }
     docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = minhash_dedup_pairs_sql(
+    pairs = minhash_dedup_pairs(
         docs, "doc_id", "text", n=2, bands=8, rows=4, threshold=0.5
     ).collect()
     assert pairs, "fixture should plant near-dups"

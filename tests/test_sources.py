@@ -124,3 +124,71 @@ def test_fan_out_without_jdf_returns_input(spark):
 
     fake = NoJdf(spark.range(5))
     assert fan_out(fake) is fake
+
+
+def test_load_table_infers_schema_once(spark, tmp_path):
+    """A warm ``load_table`` of an unchanged table starts no Spark job:
+    the parquet footer is read once, then the schema comes from the
+    cache. The cold call is checked too, so the probe is not vacuous."""
+    from multithreaded_map_reduce_spark.sources.catalog import load_table
+
+    spark.createDataFrame([(1, "a b")], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for phase in ("cold", "warm"):
+            group = f"load_table_{phase}_{tmp_path.name}"
+            sc.setJobGroup(group, phase)
+            load_table(spark, str(tmp_path), "documents")
+            jobs[phase] = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["cold"] and not jobs["warm"], jobs
+
+
+def test_load_table_sees_rewritten_schema(spark, tmp_path):
+    """A table rewritten at the same path with another schema is read
+    with the new schema in the same session."""
+    from multithreaded_map_reduce_spark.sources.catalog import load_table
+
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame([(1, "a")], "doc_id long, text string").write.parquet(path)
+    assert load_table(spark, str(tmp_path), "documents").columns == ["doc_id", "text"]
+    spark.createDataFrame([(2, "b", "en")], "doc_id long, text string, lang string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    got = load_table(spark, str(tmp_path), "documents")
+    assert got.columns == ["doc_id", "text", "lang"]
+    assert [tuple(r) for r in got.collect()] == [(2, "b", "en")]
+
+
+def test_fan_out_keeps_multi_file_scan(spark, tmp_path):
+    """An input whose files already scan as at least one partition per
+    core is returned unchanged; a 1-file input, and 9 small files that
+    Spark packs into 5 partitions on 8 cores, are still repartitioned.
+    ``_scan_splits`` must agree with the scan's real partition count."""
+    from multithreaded_map_reduce_spark.sources.catalog import (
+        _has_repartition,
+        _scan_splits,
+        fan_out,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    for n_files in (1, cores, cores + 1):
+        path = str(tmp_path / f"t{n_files}")
+        spark.range(0, 100 * n_files, numPartitions=n_files).selectExpr(
+            "id", "repeat('x', 40) AS text"
+        ).write.parquet(path)
+        df = spark.read.parquet(path)
+        assert len(df.inputFiles()) == n_files
+        scan_parts = df.rdd.getNumPartitions()
+        assert _scan_splits(spark, df.inputFiles()) == scan_parts, n_files
+        out = fan_out(df)
+        if n_files == cores:
+            assert scan_parts >= cores and out is df
+        else:
+            assert scan_parts < cores
+            assert _has_repartition(out._jdf.queryExecution().optimizedPlan())
