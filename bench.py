@@ -732,6 +732,7 @@ def main() -> None:
         # fleet-wide regression until re-derived by hand).
         cur_base = warm if prev_warm else timings
         prev_base = prev_warm or prev_cold
+        base_kind = "warm median" if prev_warm else "cold time"
         basis = ("warm-vs-warm" if prev_warm else "cold-vs-cold") + f":{prev_name}"
         # Canary normalization (VERDICT r6 item 8): r6's cold tail
         # triggered a false fleet-regression scare on a run whose own
@@ -762,7 +763,7 @@ def main() -> None:
                 kind = f"plan CHANGED ({old_h} -> {new_h}) -> real plan change"
             print(
                 f"REGRESSION: {name} {ratio}x slower than {prev_name} "
-                f"(canary-normalized /{round(host_ratio, 2)}; warm median "
+                f"(canary-normalized /{round(host_ratio, 2)}; {base_kind} "
                 f"{prev_base[name]}s -> {cur_base[name]}s; {kind})",
                 file=sys.stderr,
             )
