@@ -117,20 +117,6 @@ def shingle_hash_rows(
     return ex.filter(keep).select("id", h.alias("h"))
 
 
-def with_shingle_hashes(
-    df: DataFrame, id_col: str, text_col: str, n: int = 2
-) -> DataFrame:
-    """(id, hashes): distinct shingle-hash set per document (the exact
-    Jaccard-verify relation), built from ``shingle_hash_rows``."""
-    return (
-        shingle_hash_rows(df, id_col, text_col, n)
-        .groupBy("id")
-        .agg(F.collect_set("h").alias("hashes"))
-    )
-
-
-
-
 def _sql_signatures(src: str, num: int) -> str:
     """Spark SQL: (id, sig) minhash signatures of the (id, h) rows of
     ``src`` — one codegen'd ``min((h*a+b) % M)`` per permutation."""

@@ -13,29 +13,30 @@ register it in a factory (``MapReduceMaster.h:27-72``), and call
 per process (lookup name ``"MapReduce"``, quirk Q5); here the registry
 holds any number of named programs.
 
-Spark mapping (SURVEY.md §2a rows 3–6): map = ``flatMap``, shuffle =
-Spark's shuffle, group = ``groupByKey``, reduce = ``flatMap`` over
-groups. Two execution paths:
+Spark mapping (SURVEY.md §2a rows 3–6): one DataFrame plan. ``map_fn``
+runs in a pickled UDF per row returning ``array<struct<key, value>>``,
+which ``inline`` makes rows. Reduce:
 
-- ``run``: honest per-record Python adapter (RDD). Exists for API
-  parity; arbitrary Python closures can't go through Catalyst.
-- ``run_with_combiner``: when the user declares the reduction
-  associative+commutative (``combine_fn``), uses ``aggregateByKey`` so
-  partial aggregation happens map-side — the combiner the reference
-  never implemented (SURVEY.md §4): at 100 TB this is the difference
-  between shuffling every emitted pair and shuffling one pre-aggregated
-  value per (partition, key).
+- ``run_with_combiner``: a declared reduction (``REDUCTIONS`` plus an
+  optional Column ``finish``) is a Catalyst partial and final aggregate
+  — the map-side combiner the reference never implemented (SURVEY.md
+  §4) — so the program evaluates Python once.
+- ``run``: any ``reduce_fn``, in a second UDF over ``collect_list``.
 
-Known-shape programs (word count, inverted index) should instead use the
-declarative queries in ``queries/corpus.py`` — built-ins beat any UDF.
+On 4 vCPUs a Python evaluation adds 0.2-0.3 s of worker set-up per
+task, more than a JVM-only job. There, ``mapInArrow`` was no faster and
+raised peak RSS 7 %; ``applyInArrow`` took 4.6 s vs 1.1 s (12k keys).
+Known-shape programs should use the declarative ``queries/corpus.py``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
+from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MapFn = Callable[[Any, Any], Iterable[tuple[Any, Any]]]
@@ -48,66 +49,64 @@ OUT_SCHEMA = T.StructType(
     ]
 )
 
+# Associative and commutative: Catalyst aggregates them before the shuffle.
+REDUCTIONS: dict[str, Callable[[Column], Column]] = dict(
+    sum=F.sum, count=F.count, min=F.min, max=F.max, set=F.collect_set
+)
 
+
+def _rows_udf(fn: Callable, row_type: T.StructType):  # pickled: Arrow costs RSS
+    return F.udf(lambda a, b: list(fn(a, b)), T.ArrayType(row_type), useArrow=False)
+
+
+@dataclass
 class MapReduce:
-    """A named (map_fn, reduce_fn) program, runnable over any DataFrame."""
+    """A named (map_fn, reduce_fn) program, runnable over any DataFrame.
+    Emitted pairs take the output schema's first two field types (an
+    array gives its element type), unless ``value_type`` is set."""
 
-    def __init__(
-        self,
-        map_fn: MapFn,
-        reduce_fn: ReduceFn,
-        name: str = "MapReduce",
-        num_partitions: int | None = None,
-    ):
-        self.map_fn = map_fn
-        self.reduce_fn = reduce_fn
-        self.name = name
-        self.num_partitions = num_partitions
+    map_fn: MapFn
+    reduce_fn: ReduceFn | None
+    name: str = "MapReduce"
+    value_type: T.DataType | None = None
+
+    def _pairs(self, df: DataFrame, key_col: str, value_col: str, out_schema) -> DataFrame:
+        """Rows ``(key, value)``: every pair ``map_fn`` emits."""
+        key_t, value_t = (f.dataType for f in out_schema.fields[:2])
+        value_t = getattr(value_t, "elementType", value_t)
+        pair = T.StructType().add("key", key_t).add("value", self.value_type or value_t)
+        return df.select(F.inline(_rows_udf(self.map_fn, pair)(key_col, value_col)))
 
     def run(self, df: DataFrame, key_col: str, value_col: str, out_schema=OUT_SCHEMA) -> DataFrame:
-        """map → shuffle → group → reduce, reference semantics.
-
-        ``reduce_fn`` receives the full (unordered) value list per key,
-        exactly like the reference's ``vector<string>`` — and with the
-        same flaw: a skewed key's values must fit in one task's memory.
-        Prefer ``run_with_combiner`` when the reduction allows it.
-        """
-        spark = df.sparkSession
-        map_fn, reduce_fn = self.map_fn, self.reduce_fn
-        rdd = df.select(key_col, value_col).rdd.flatMap(lambda r: map_fn(r[0], r[1]))
-        grouped = rdd.groupByKey(self.num_partitions)
-        out = grouped.flatMap(lambda kv: reduce_fn(kv[0], list(kv[1])))
-        return spark.createDataFrame(out, out_schema)
+        """map → shuffle → group → reduce, reference semantics:
+        ``reduce_fn`` gets each key's full (unordered) value list, like
+        the reference's ``vector<string>`` — and with its flaw, a skewed
+        key's values must fit in one task's memory. Prefer
+        ``run_with_combiner`` when the reduction allows it."""
+        grouped = (
+            self._pairs(df, key_col, value_col, out_schema)
+            .groupBy("key")
+            .agg(F.collect_list("value").alias("values"))
+        )
+        return grouped.select(F.inline(_rows_udf(self.reduce_fn, out_schema)("key", "values")))
 
     def run_with_combiner(
-        self,
-        df: DataFrame,
-        key_col: str,
-        value_col: str,
-        zero: Any,
-        combine_fn: Callable[[Any, Any], Any],
-        merge_fn: Callable[[Any, Any], Any] | None = None,
-        finish_fn: Callable[[Any, Any], Iterable[tuple[Any, Any]]] | None = None,
-        out_schema=OUT_SCHEMA,
+        self, df: DataFrame, key_col: str, value_col: str, reduction: str,
+        finish: Callable[[Column], Column] | None = None, out_schema=OUT_SCHEMA,
     ) -> DataFrame:
-        """Same pipeline with map-side partial aggregation.
-
-        ``combine_fn(acc, v2)`` folds one emitted value into the
-        accumulator; ``merge_fn(acc, acc)`` merges partials (defaults to
-        ``combine_fn``); ``finish_fn(key, acc)`` shapes the output rows
-        (defaults to ``reduce_fn(key, acc)`` if acc is a list, else
-        one ``(key, acc)`` row).
-        """
-        spark = df.sparkSession
-        map_fn = self.map_fn
-        merge = merge_fn or combine_fn
-        rdd = df.select(key_col, value_col).rdd.flatMap(lambda r: map_fn(r[0], r[1]))
-        agg = rdd.aggregateByKey(zero, combine_fn, merge, self.num_partitions)
-        if finish_fn is None:
-            out = agg.map(lambda kv: (kv[0], kv[1]))
-        else:
-            out = agg.flatMap(lambda kv: finish_fn(kv[0], kv[1]))
-        return spark.createDataFrame(out, out_schema)
+        """Same pipeline, with ``REDUCTIONS[reduction]`` aggregated
+        map-side; ``finish`` shapes the reduced Column (e.g. sort and
+        join a set). One row per key, cast to ``out_schema``."""
+        reduced = REDUCTIONS[reduction](F.col("value"))
+        if finish is not None:
+            reduced = finish(reduced)
+        (key, key_t), (out, out_t) = ((f.name, f.dataType) for f in out_schema.fields[:2])
+        return (
+            self._pairs(df, key_col, value_col, out_schema)
+            .groupBy("key")
+            .agg(reduced.alias("reduced"))
+            .select(F.col("key").cast(key_t).alias(key), F.col("reduced").cast(out_t).alias(out))
+        )
 
 
 # Registry — generalizes the reference's single-slot factory

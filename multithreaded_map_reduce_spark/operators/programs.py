@@ -1,5 +1,5 @@
 """The reference's two shipped client programs, re-expressed on the
-generic MapReduce adapter — proving the ``map_fn``/``reduce_fn`` API
+generic MapReduce API — proving the ``map_fn``/``reduce_fn`` surface
 carries the same workloads end-to-end.
 
 - WordCounter    ← ``src/WordCounter.cpp:19-41``: map emits (word, 1)
@@ -11,14 +11,17 @@ carries the same workloads end-to-end.
   positions numerically; ``lexicographic=True`` reproduces quirk Q1
   ("10" < "2").
 
-These run through real Python closures on executors (the honest API
-path). The declarative twins in ``queries/corpus.py`` are the fast path
-— same results, Catalyst-optimized.
+Each ``map_fn`` is a real Python closure, evaluated once per program
+in one UDF. Each reduction is declared (``sum``, or ``set`` plus a
+Column finish for the index), so Catalyst reduces in the JVM; a
+program's ``reduce_fn`` is kept for the generic ``MapReduce.run`` path.
+The declarative twins in ``queries/corpus.py`` keep the map in Catalyst too.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .mapreduce import MapReduce
@@ -50,19 +53,12 @@ def word_counter() -> MapReduce:
 
 
 def run_word_counter(docs: DataFrame, combiner: bool = True) -> DataFrame:
-    """docs(doc_id, text) → (word, cnt). ``combiner=True`` uses the
-    map-side-combine path (the scale-correct default); ``False`` runs
-    the reference-faithful shuffle-everything pipeline."""
+    """docs(doc_id, text) → (word, cnt). ``combiner=True`` declares the
+    reduction a ``sum`` (the scale-correct default); ``False`` runs the
+    reference-faithful ``reduce_fn`` over each word's value list."""
     prog = word_counter()
     if combiner:
-        return prog.run_with_combiner(
-            docs,
-            "doc_id",
-            "text",
-            zero=0,
-            combine_fn=lambda acc, v: acc + v,
-            out_schema=WC_SCHEMA,
-        )
+        return prog.run_with_combiner(docs, "doc_id", "text", "sum", out_schema=WC_SCHEMA)
     return prog.run(docs, "doc_id", "text", out_schema=WC_SCHEMA)
 
 
@@ -79,12 +75,19 @@ def inverted_index_program(lexicographic: bool = False) -> MapReduce:
             ordered = [str(d) for d in sorted(set(doc_ids))]
         yield (word, ",".join(ordered))
 
-    return MapReduce(map_fn, reduce_fn, name="InvertedIndex")
+    return MapReduce(map_fn, reduce_fn, name="InvertedIndex", value_type=T.LongType())
 
 
 def run_inverted_index(docs: DataFrame, lexicographic: bool = False) -> DataFrame:
-    return inverted_index_program(lexicographic).run(
-        docs, "doc_id", "text", out_schema=II_SCHEMA
+    """docs(doc_id, text) → (word, doc_ids): the ``reduce_fn`` above as a
+    declared ``set`` reduction, sorted and joined in Catalyst."""
+
+    def finish(ids):
+        ids = F.array_sort(ids.cast("array<string>") if lexicographic else ids)
+        return F.concat_ws(",", ids.cast("array<string>"))
+
+    return inverted_index_program(lexicographic).run_with_combiner(
+        docs, "doc_id", "text", "set", finish, II_SCHEMA
     )
 
 
@@ -108,14 +111,7 @@ def run_chained_freq_of_freq(docs: DataFrame) -> DataFrame:
         yield (int(cnt), 1)
 
     prog = MapReduce(map_fn, None, name="FreqOfFreq")
-    return prog.run_with_combiner(
-        wc,
-        "word",
-        "cnt",
-        zero=0,
-        combine_fn=lambda acc, v: acc + v,
-        out_schema=FOF_SCHEMA,
-    )
+    return prog.run_with_combiner(wc, "word", "cnt", "sum", out_schema=FOF_SCHEMA)
 
 
 GREP_SCHEMA = T.StructType(
@@ -132,7 +128,7 @@ def run_grep(docs: DataFrame, pattern: str) -> DataFrame:
     index (the reference ships only the latter two): map emits
     (doc_id, 1) per token equal to the pattern, reduce sums — i.e.,
     "which documents mention X and how often". The map function is
-    ordinary Python running through the generic ``map_fn`` adapter,
+    ordinary Python running through the generic ``map_fn`` API,
     exactly the client surface the reference exposes."""
 
     def map_fn(doc_id, text):
@@ -141,11 +137,4 @@ def run_grep(docs: DataFrame, pattern: str) -> DataFrame:
                 yield (int(doc_id), 1)
 
     prog = MapReduce(map_fn, None, name="Grep")
-    return prog.run_with_combiner(
-        docs,
-        "doc_id",
-        "text",
-        zero=0,
-        combine_fn=lambda acc, v: acc + v,
-        out_schema=GREP_SCHEMA,
-    )
+    return prog.run_with_combiner(docs, "doc_id", "text", "sum", out_schema=GREP_SCHEMA)

@@ -2,41 +2,41 @@
 
 The reference keys each record by its 0-based global line number
 (``include/MapReduceMaster.h:463-478``: ``map_fn(to_string(record_number),
-line)``). Reproduced here as a DataFrame ``(line_no BIGINT, line STRING)``.
-
-Scale note: ``zipWithIndex`` costs one extra job to count per-partition
-sizes, but keeps line numbers dense and global, matching the reference's
-semantics. For workloads that only need a *stable unique* id (not dense),
-``monotonically_increasing_id`` is free — both are offered.
+line)``). Reproduced here as a DataFrame ``(line_no BIGINT, line STRING)``
+on the file scan, with no Python and, for one split, no job.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("line_no", T.LongType(), False),
-        T.StructField("line", T.StringType(), False),
-    ]
-)
+from .catalog import _scan_splits
 
 
 def read_text_lines(spark: SparkSession, path: str, dense: bool = True) -> DataFrame:
-    """``spark.read.text`` + global line numbers.
+    """``spark.read.text`` + global line numbers, in scan order.
 
-    dense=True  → 0-based dense global line numbers (reference semantics)
-    dense=False → stable unique ids without the extra counting job
+    dense=False → ``monotonically_increasing_id``: unique, never a job.
+    dense=True  → 0-based dense (reference semantics). That is the id when
+    the scan is one split; else one JVM count per scan partition gives
+    each partition's offset, for the file splits planned at call time.
     """
     lines = spark.read.text(path)
-    if dense:
-        rdd = lines.rdd.map(lambda r: r[0]).zipWithIndex().map(lambda t: (t[1], t[0]))
-        return spark.createDataFrame(rdd, LINES_SCHEMA)
-    return lines.select(
-        F.monotonically_increasing_id().alias("line_no"), F.col("value").alias("line")
-    )
+    line_no = F.monotonically_increasing_id()
+    if dense and _scan_splits(spark, lines.inputFiles()) != 1:
+        pid = F.spark_partition_id()
+        counts = dict(lines.groupBy(pid).count().collect())
+        sizes = [counts.get(p, 0) for p in range(max(counts, default=0) + 1)]
+        start = F.array(*map(F.lit, accumulate(sizes, initial=0)))[pid]
+        row = line_no % (1 << 33)  # the id is (partition << 33) + row number
+        # a scan re-planned with other splits fails rather than misnumbers
+        line_no = F.when(row < F.array(*map(F.lit, sizes))[pid], start + row).otherwise(
+            F.raise_error(F.lit("read_text_lines: file splits changed after numbering"))
+        )
+    return lines.select(line_no.alias("line_no"), F.col("value").alias("line"))
 
 
 def corpus_lines(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -52,6 +52,11 @@ _WHITELIST: list[tuple[str, str, str]] = [
         r"\)\.collect\(\)\[0\]",
         "connected-components convergence probe: 1 aggregate row per round",
     ),
+    (
+        "sources/text.py",
+        r"counts = dict\(lines\.groupBy\(pid\)\.count\(\)\.collect\(\)\)",
+        "dense line offsets: one count row per scan partition",
+    ),
 ]
 
 

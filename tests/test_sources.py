@@ -3,6 +3,7 @@ mapping, csv/json round-trips, stateful streaming."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -20,6 +21,83 @@ def test_read_text_lines_dense(spark, tmp_path):
     rows = sorted((r["line_no"], r["line"]) for r in df.collect())
     assert [r[0] for r in rows] == list(range(257))
     assert rows[42][1] == "line number 42 content"
+
+
+def _text_lines(spark, path, max_partition_bytes=None):
+    """``read_text_lines(path)`` collected as sorted ``(line_no, line)``,
+    with the scan's partition count; ``max_partition_bytes`` is set only
+    for the call and the action."""
+    from multithreaded_map_reduce_spark.sources.text import read_text_lines
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        if max_partition_bytes is not None:
+            spark.conf.set(key, str(max_partition_bytes))
+        df = read_text_lines(spark, path)
+        return df, sorted(map(tuple, df.collect())), spark.read.text(path).rdd.getNumPartitions()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_read_text_lines_dense_file_split_into_partitions(spark, tmp_path):
+    """One file scanned as several byte-range partitions is numbered by
+    its line index, not per partition; a later action under other file
+    splits fails instead of misnumbering."""
+    p = tmp_path / "input.txt"
+    lines = [f"line {i} " + "x" * (i % 13) for i in range(400)]
+    p.write_text("\n".join(lines) + "\n")
+    df, rows, parts = _text_lines(spark, str(p), max_partition_bytes=2048)
+    assert parts >= 3
+    assert rows == list(enumerate(lines))
+    # a new plan over the same numbering now scans one split: it fails loudly
+    with pytest.raises(Exception, match="file splits changed"):
+        df.select("line_no").collect()
+
+
+def test_read_text_lines_dense_empty_file(spark, tmp_path):
+    p = tmp_path / "empty.txt"
+    p.write_text("")
+    df, rows, _ = _text_lines(spark, str(p))
+    assert rows == []
+    assert df.dtypes == [("line_no", "bigint"), ("line", "string")]
+
+
+def test_read_text_lines_dense_directory_in_scan_order(spark, tmp_path):
+    """Several files are numbered in the scan's partition order, row by
+    row — the order ``zipWithIndex`` over the scan gives."""
+    for i, n in enumerate((5, 40, 17)):
+        (tmp_path / f"part-{i}.txt").write_text("".join(f"f{i} l{j}\n" for j in range(n)))
+    _, rows, parts = _text_lines(spark, str(tmp_path))
+    assert parts >= 2
+    want = spark.read.text(str(tmp_path)).rdd.map(lambda r: r[0]).zipWithIndex()
+    assert rows == sorted((i, line) for line, i in want.collect())
+
+
+def test_read_text_lines_dense_single_split_starts_no_job(spark, tmp_path):
+    """A single-split file is numbered by ``monotonically_increasing_id``
+    with no Spark job; split into partitions, it takes one count job.
+    Jobs are counted by job group."""
+    from multithreaded_map_reduce_spark.sources.text import read_text_lines
+
+    p = tmp_path / "input.txt"
+    p.write_text("".join(f"line {i} content\n" for i in range(300)))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for splits, max_bytes in (("one", old), ("many", "1024")):
+            spark.conf.set(key, max_bytes)
+            group = f"read_text_lines_{splits}_{tmp_path.name}"
+            sc.setJobGroup(group, splits)
+            read_text_lines(spark, str(p))
+            jobs[splits] = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        spark.conf.set(key, old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["many"] and not jobs["one"], jobs
 
 
 def test_corpus_lines_shape(spark):
