@@ -16,9 +16,24 @@ Nothing here copies reference code — the reference is a C++ process-fork
 RPC engine; this package is a PySpark library.
 """
 
-from .session import get_spark
-from .sources.catalog import TABLES, load_table, register_views
-from .operators.mapreduce import MapReduce
+import importlib
 
-__all__ = ["get_spark", "TABLES", "load_table", "register_views", "MapReduce"]
+# Imported on first use, so that ``python -m
+# multithreaded_map_reduce_spark.daemon`` can set ``sys.path`` before
+# anything imports pyspark.
+_EXPORTS = {
+    "get_spark": ".session",
+    "TABLES": ".sources.catalog",
+    "load_table": ".sources.catalog",
+    "register_views": ".sources.catalog",
+    "MapReduce": ".operators.mapreduce",
+}
+
+__all__ = list(_EXPORTS)
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(_EXPORTS[name], __name__), name)

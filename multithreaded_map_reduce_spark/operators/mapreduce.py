@@ -23,9 +23,10 @@ which ``inline`` makes rows. Reduce:
   §4) — so the program evaluates Python once.
 - ``run``: any ``reduce_fn``, in a second UDF over ``collect_list``.
 
-On 4 vCPUs a Python evaluation adds 0.2-0.3 s of worker set-up per
-task, more than a JVM-only job. There, ``mapInArrow`` was no faster and
-raised peak RSS 7 %; ``applyInArrow`` took 4.6 s vs 1.1 s (12k keys).
+On 4 vCPUs a warm one-row job with a pickled UDF takes about 0.17 s,
+against 0.05 s as a JVM expression (workers start through
+``daemon.py``, see ``session.py``). There, ``mapInArrow`` was no faster and raised peak RSS 7 %; ``applyInArrow``
+took 4.6 s vs 1.1 s (12k keys).
 Known-shape programs should use the declarative ``queries/corpus.py``.
 """
 

@@ -13,6 +13,10 @@ Scale notes (100 TB design):
 - Arrow enabled for the Pandas-UDF slow path.
 - UTC session timezone so results are portable (and match the DuckDB
   oracle used by the test harness).
+- Python workers start through ``daemon.py``, which imports the
+  driver's pyspark instead of Spark's zip archives, so a task does not
+  re-read 6.7k archive entries; the package's parent directory is put
+  on the workers' ``PYTHONPATH`` so that module imports from any cwd.
 """
 
 from __future__ import annotations
@@ -21,6 +25,9 @@ import os
 import threading
 
 from pyspark.sql import SparkSession
+
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -37,6 +44,8 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    extra_conf = dict(extra_conf or {})
+    worker_pythonpath = [extra_conf.pop(_WORKER_PYTHONPATH, ""), _PACKAGE_PARENT]
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -49,6 +58,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.python.daemon.module", f"{__package__}.daemon")
+        .config(_WORKER_PYTHONPATH, os.pathsep.join(filter(None, worker_pythonpath)))
         # r13 OPT: the ContextCleaner only reclaims dead shuffle files,
         # broadcast vars and (local)checkpoint blocks when driver GC
         # collects their weak refs — with a 16g heap a long multi-query
@@ -62,9 +73,8 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"),
         )
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
